@@ -35,9 +35,12 @@ final case class BatchExport(df: DataFrame, keyCol: String,
 
   /** Shapes from schema metadata — no data probe needed for fixed-width
     * types; array lengths are probed from the first row (the reference's
-    * shape probe, D2, minus its early-return bug `serialize.py:728`). */
+    * shape probe, D2, minus its early-return bug `serialize.py:728`). The
+    * probe is a sort job, so it runs only when an array or image-struct
+    * column reads it: binary, string and scalar schemas (the dir layouts)
+    * cost no job. */
   lazy val shapes: Map[String, Seq[Int]] = {
-    val probe = df.orderBy(col(keyCol)).limit(1).collect().headOption
+    lazy val probe = df.orderBy(col(keyCol)).limit(1).collect().headOption
     (inputCols ++ outputCols).map { c =>
       val shape = df.schema(c).dataType match {
         case ArrayType(_, _) =>

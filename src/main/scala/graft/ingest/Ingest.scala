@@ -1,5 +1,6 @@
 package graft.ingest
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -158,10 +159,43 @@ object Ingest {
     df.withColumn(out, array(cols.map(c => col(c).cast("float")): _*))
 
   // ---- S3: single-input image directory scan -------------------------------
+  /** binaryFile scan whose root paths are the directories `depth` levels
+    * below `dir` (1: `dir/<label>`, 2: `dir/<stream>/<label>`), listed on
+    * the driver through the Hadoop `FileSystem` of `dir`, so any scheme
+    * Spark reads works. Only directories are kept at each level, so stray
+    * files above the leaves stay out, as they do under a `*` glob segment.
+    * Glob metacharacters in the listed names are escaped: Spark expands a
+    * root path that contains one, and a label named `a[1]` must stay that
+    * one directory. No directory at `depth` fails loudly, as the empty
+    * glob did, rather than sinking an empty dataset. */
+  private def scanLeafDirs(spark: SparkSession, dir: String, depth: Int): DataFrame = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val dirs = (1 to depth).foldLeft(Seq(root)) { (parents, _) =>
+      parents.flatMap(p => fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath).sorted)
+    }
+    require(dirs.nonEmpty, s"no label directories $depth level(s) under $dir")
+    spark.read.format("binaryFile")
+      .load(dirs.map(_.toString.replaceAll("""([\\{}\[\]*?])""", """\\$1""")): _*)
+  }
+
   /** `dir/<label>/<img>` layout: binary scan + label from the parent dir
-    * (`serialize.py:44-64`). Keys follow sorted (label, path) order. */
+    * (`serialize.py:44-64`). Keys follow sorted (label, path) order.
+    *
+    * The driver lists the label directories of `dir` and hands THEM to
+    * Spark as root paths, as the reference walks one label directory at a
+    * time. A two-level `*` glob would list every file on the driver and then
+    * hand each file to Spark as a root path: past 32 root paths
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`) Spark
+    * lists them again in a job of one task per FILE. With label roots,
+    * up to 32 labels are listed on the driver with no job, and more run
+    * one listing task per LABEL. Stray top-level files stay out; an
+    * archive with no label directory fails here, as the empty glob did.
+    * Files in a sub-directory of a label are not read: the glob matched
+    * such a sub-directory as a root path and read its files under a
+    * label named after it. */
   def readImageDir(spark: SparkSession, dir: String): DataFrame = {
-    val df = spark.read.format("binaryFile").load(s"$dir/*/*")
+    val df = scanLeafDirs(spark, dir, depth = 1)
       .select(
         col("path"),
         element_at(split(col("path"), "/"), -2).as("slabel"),
@@ -173,9 +207,10 @@ object Ingest {
   /** S4: n-images-per-record: `dir/<stream>/<label>/<img>`; the i-th
     * (sorted) file of each label in each stream forms one record
     * (`serialize.py:66-113`, sorted zip at :91). One wide row per record:
-    * a struct column per stream. */
+    * a struct column per stream. The `<stream>/<label>` directories are
+    * the root paths, listed on the driver as in [[readImageDir]]. */
   def readImageStreams(spark: SparkSession, dir: String): DataFrame = {
-    val scan = spark.read.format("binaryFile").load(s"$dir/*/*/*")
+    val scan = scanLeafDirs(spark, dir, depth = 2)
       .select(
         element_at(split(col("path"), "/"), -3).as("stream"),
         element_at(split(col("path"), "/"), -2).as("slabel"),

@@ -1,7 +1,6 @@
 package graft.ml
 
-import java.io.ByteArrayInputStream
-import javax.imageio.ImageIO
+import graft.operators.Multimodal
 
 /** M1: the MIMO training consumer (`/root/reference/tests/keras_mimo.py:17-67`),
   * re-expressed as a deterministic pure-JVM trainer so the engine's
@@ -159,24 +158,8 @@ object MimoTrainer {
   private def isNumericSeq(s: scala.collection.Seq[Any]): Boolean =
     s.forall(e => e == null || e.isInstanceOf[java.lang.Number] || e.isInstanceOf[java.lang.Boolean])
   private def decodeRgb(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] =
-    try Option(ImageIO.read(new ByteArrayInputStream(bytes))).map { img =>
-      val h = img.getHeight; val w = img.getWidth
-      val out = new Array[Byte](h * w * 3)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val rgb = img.getRGB(x, y)
-          val i = (y * w + x) * 3
-          out(i) = ((rgb >> 16) & 0xff).toByte
-          out(i + 1) = ((rgb >> 8) & 0xff).toByte
-          out(i + 2) = (rgb & 0xff).toByte
-          x += 1
-        }
-        y += 1
-      }
-      (h, w, out)
-    } catch { case _: Exception => None }
+    try Multimodal.readImage(bytes).map(img => (img.getHeight, img.getWidth, Multimodal.toRgbBytes(img)))
+    catch { case _: Exception => None }
 
   /** Build a column's featurizer from its probe cell. A string OUTPUT
     * column is a label (the dir-layout slabel); string INPUT columns

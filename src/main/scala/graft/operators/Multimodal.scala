@@ -3,6 +3,7 @@ package graft.operators
 import java.awt.image.BufferedImage
 import java.io.ByteArrayInputStream
 import javax.imageio.ImageIO
+import javax.imageio.stream.{ImageInputStream, MemoryCacheImageInputStream}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -39,7 +40,25 @@ object Multimodal {
   /** Raw binary row: (key, identifier, payload). */
   case class BinaryRecord(key: Long, identifier: String, payload: Array[Byte])
 
-  private def toRgbBytes(img: BufferedImage): Array[Byte] = {
+  /** ImageIO input over in-memory bytes, the one stream every decode here
+    * reads. `ImageIO.read(InputStream)` and `createImageInputStream` pick a
+    * FILE-backed stream cache while ImageIO's JVM-global `useCache` is on
+    * (its default), so each decode wrote and deleted a temp file for bytes
+    * that are already in memory. */
+  private[graft] def imageStream(bytes: Array[Byte]): ImageInputStream =
+    new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
+
+  /** Decode one still image; None when no ImageIO reader knows the format.
+    * `ImageIO.read` closes the stream itself once a reader has taken it. */
+  private[graft] def readImage(bytes: Array[Byte]): Option[BufferedImage] = {
+    val in = imageStream(bytes)
+    val img = ImageIO.read(in)
+    if (img == null) in.close()
+    Option(img)
+  }
+
+  /** Row-major interleaved RGB bytes of `img`. */
+  private[graft] def toRgbBytes(img: BufferedImage): Array[Byte] = {
     val (h, w) = (img.getHeight, img.getWidth)
     val out = new Array[Byte](h * w * 3)
     var i = 0
@@ -59,7 +78,7 @@ object Multimodal {
   }
 
   private def decodeOne(key: Long, id: String, bytes: Array[Byte]): Option[ImageRecord] =
-    Option(ImageIO.read(new ByteArrayInputStream(bytes))).map { img =>
+    readImage(bytes).map { img =>
       ImageRecord(key, id, 3, img.getHeight, img.getWidth, toRgbBytes(img))
     }
 
@@ -240,7 +259,7 @@ object Multimodal {
     * frame must be decoded to composite correctly; only every n-th is
     * *emitted*. */
   private def decodeGif(payload: Array[Byte], everyNth: Int): Option[Seq[RawFrame]] = {
-    val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(payload))
+    val iis = imageStream(payload)
     val readers = ImageIO.getImageReaders(iis)
     if (!readers.hasNext) { iis.close(); return None } // close: no reader owns iis yet
     val reader = readers.next()

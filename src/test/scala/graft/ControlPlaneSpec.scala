@@ -107,6 +107,23 @@ class ControlPlaneSpec extends SparkSpec {
     }
   }
 
+  test("stop() ends the handler threads, so sessions do not pile up threads") {
+    def liveThreads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread]).toSet
+    val before = liveThreads
+    val cp = new ControlPlane(spark, java.nio.file.Files.createTempDirectory("graft-cp-stop").toString)
+    val port = cp.start()
+    // each request runs on a pool thread, which the pool creates lazily
+    (1 to 4).foreach(_ => assert(get(s"http://127.0.0.1:$port/download").startsWith("Send a POST")))
+    // non-daemon ones only: the HTTP client's daemon workers idle on by design
+    val started = (liveThreads -- before).filterNot(_.isDaemon)
+    assert(started.nonEmpty, "the handler pool's threads should be running")
+    cp.stop()
+    val deadline = System.currentTimeMillis() + 10000
+    def leaked = started.filter(_.isAlive)
+    while (leaked.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    assert(leaked.isEmpty, s"threads still alive after stop(): ${leaked.map(_.getName)}")
+  }
+
   test("S4 multi-input layout: input list > 1 routes to the n-per-record scan") {
     // dir/<stream>/<label>/<img> layout — two streams, one label, one
     // record; serialize with a 2-element input spec must pivot to one

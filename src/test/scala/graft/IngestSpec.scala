@@ -108,6 +108,102 @@ class IngestSpec extends SparkSpec {
     assert(wide.filter(col("rgb").isNull || col("depth").isNull).count() == 0)
   }
 
+  private def png(path: java.nio.file.Path, rgb: Int): Unit = {
+    Files.createDirectories(path.getParent)
+    val img = new BufferedImage(2, 2, BufferedImage.TYPE_INT_RGB)
+    img.setRGB(0, 0, rgb)
+    ImageIO.write(img, "png", path.toFile)
+  }
+
+  /** The archive shapes a label-directory listing must treat exactly as the
+    * `*` glob segments did, under `root`: labels with glob metacharacters,
+    * `.`/`_`-prefixed files and label dirs, an empty label dir, a file
+    * two directory levels below a label and stray files above the labels. */
+  private def awkwardLabels(root: java.nio.file.Path): Unit = {
+    for ((label, i) <- Seq("cat", "dog", "b[1]", "x{y}", "_under", ".dot").zipWithIndex) {
+      png(root.resolve(label).resolve("a.png"), i)
+      png(root.resolve(label).resolve("b.png"), i + 16)
+    }
+    png(root.resolve("cat").resolve(".hidden.png"), 7)
+    png(root.resolve("cat").resolve("_under.png"), 8)
+    png(root.resolve("dog").resolve("sub").resolve("deep").resolve("deeper.png"), 10)
+    Files.createDirectories(root.resolve("empty"))
+    Files.writeString(root.resolve("stray.txt"), "not an image")
+  }
+
+  /** The form `readImageDir` replaced: the files a two-level `*` glob matches as root paths. */
+  private def readImageDirGlob(dir: String) = {
+    val df = spark.read.format("binaryFile").load(s"$dir/*/*")
+      .select(col("path"), element_at(split(col("path"), "/"), -2).as("slabel"), col("content"))
+    Ingest.withDenseKey(df, Seq(col("slabel"), col("path")))
+      .select("key", "path", "slabel", "content")
+  }
+
+  /** The form `readImageStreams` replaced: a three-level `*` glob's matches as root paths. */
+  private def readImageStreamsGlob(dir: String) = {
+    val scan = spark.read.format("binaryFile").load(s"$dir/*/*/*")
+      .select(element_at(split(col("path"), "/"), -3).as("stream"),
+        element_at(split(col("path"), "/"), -2).as("slabel"), col("path"), col("content"))
+    val wide = scan.withColumn("pos", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("stream", "slabel").orderBy("path")))
+      .groupBy("slabel", "pos").pivot("stream").agg(first(struct(col("path"), col("content"))))
+    val streamCols = wide.columns.filterNot(Set("slabel", "pos"))
+    val complete = wide.filter(streamCols.map(col(_).isNotNull).reduce(_ && _))
+    Ingest.withDenseKey(complete, Seq(col("slabel"), col("pos"))).drop("pos")
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): (Seq[String], Seq[String]) =
+    (df.columns.toSeq, df.orderBy("key").toJSON.collect().toSeq)
+
+  test("label-directory listing reads the same rows as the glob forms (S3, S4)") {
+    val dir = Files.createTempDirectory("imgs-awkward")
+    awkwardLabels(dir)
+    val single = rowsOf(Ingest.readImageDir(spark, dir.toString))
+    assert(single == rowsOf(readImageDirGlob(dir.toString)))
+    assert(single._2.size == 12)
+
+    val streams = Files.createTempDirectory("mimo-awkward")
+    awkwardLabels(streams.resolve("rgb"))
+    awkwardLabels(streams.resolve("depth"))
+    Files.writeString(streams.resolve("stray.txt"), "not a stream")
+    val wide = rowsOf(Ingest.readImageStreams(spark, streams.toString))
+    assert(wide == rowsOf(readImageStreamsGlob(streams.toString)))
+    assert(wide._2.size == 12)
+
+    // the one shape where the forms part: files in a sub-directory right
+    // below a label. The glob matched that sub-directory as a root path and
+    // read its files under a label named after it; the listing reads label
+    // directories only, so the phantom label `sub` no longer appears
+    png(dir.resolve("cat").resolve("sub").resolve("nested.png"), 9)
+    assert(rowsOf(Ingest.readImageDir(spark, dir.toString)) == single)
+    assert(readImageDirGlob(dir.toString).filter(col("slabel") === "sub").count() == 1)
+  }
+
+  test("an archive with no label directory fails loudly, never sinks an empty dataset") {
+    val dir = Files.createTempDirectory("imgs-flat")
+    png(dir.resolve("loose.png"), 1)
+    intercept[IllegalArgumentException](Ingest.readImageDir(spark, dir.toString))
+    intercept[IllegalArgumentException](Ingest.readImageStreams(spark, dir.toString))
+    val bare = Files.createTempDirectory("imgs-bare")
+    intercept[IllegalArgumentException](Ingest.readImageDir(spark, bare.toString))
+  }
+
+  test("label-directory listing: no job up to 32 labels, one listing task per label past it") {
+    // two files per label: the glob form's root paths are the FILES, so
+    // past 32 of them Spark runs a listing job with one task per file
+    def archive(labels: Int) = {
+      val dir = Files.createTempDirectory(s"imgs-$labels")
+      for (l <- 1 to labels; i <- 1 to 2) png(dir.resolve(f"l$l%02d").resolve(s"$i.png"), l)
+      dir.toString
+    }
+    val at32 = archive(32)
+    assert(jobsAndTasks(Ingest.readImageDir(spark, at32)) == ((0, 0)))
+    assert(jobsAndTasks(readImageDirGlob(at32)) == ((1, 64)))
+    val at33 = archive(33)
+    assert(jobsAndTasks(Ingest.readImageDir(spark, at33)) == ((1, 33)))
+    assert(Ingest.readImageDir(spark, at33).count() == 66)
+  }
+
   test("binding-driven scan associates per-stream files by stem (S5)") {
     val dir = tmpDir("binding")
     for (stem <- Seq("x1", "x2", "y1")) {
@@ -249,6 +345,23 @@ class IngestSpec extends SparkSpec {
     // distributed integrity count of the pinned view (no driver drain)
     assert(be.epochRows == 20)
     be.release()
+  }
+
+  test("batch export shapes: no probe job for a dir-layout schema, probed array lengths") {
+    // the dir layout's columns are string/binary: every shape is [1] from
+    // the schema alone, so the key-sorted probe must not run
+    val sink = Files.createTempDirectory("export-shapes").resolve("dir.parquet").toString
+    Seq((1L, "p1", "cat", Array[Byte](1, 2)), (2L, "p2", "dog", Array[Byte](3)))
+      .toDF("key", "path", "slabel", "content").write.parquet(sink)
+    val dirLayout = BatchExport(spark.read.parquet(sink), "key", Seq("path", "content"),
+      Seq("slabel"), batchSize = 1)
+    var shapes = Map.empty[String, Seq[Int]]
+    assert(jobsAndTasks { shapes = dirLayout.shapes } == ((0, 0)))
+    assert(shapes == Map("path" -> Seq(1), "content" -> Seq(1), "slabel" -> Seq(1)))
+    // an array column still reads its length from the first row by key
+    val arrays = BatchExport(Seq((2L, Array(1f, 2f)), (1L, Array(1f, 2f, 3f)))
+      .toDF("key", "features"), "key", Seq("features"), Nil, batchSize = 1)
+    assert(arrays.shapes == Map("features" -> Seq(3)))
   }
 
   test("batch export spill mode: reliable layout, same batches, no per-epoch sort") {

@@ -102,6 +102,40 @@ class MultimodalSpec extends SparkSpec {
     img
   }
 
+  test("in-memory image decode is bit-identical to ImageIO's stream-cached read (PNG, GIF)") {
+    // the form it replaced: ImageIO over an InputStream, whose default
+    // cache backs the stream with a temp file
+    def oldRgb(bytes: Array[Byte]) =
+      Multimodal.toRgbBytes(ImageIO.read(new java.io.ByteArrayInputStream(bytes))).toSeq
+    def newRgb(bytes: Array[Byte]) = Multimodal.toRgbBytes(Multimodal.readImage(bytes).get).toSeq
+    val rnd = new scala.util.Random(17)
+    val pngs = for {
+      (w, h) <- Seq((1, 1), (16, 16), (7, 13), (64, 3))
+      kind <- Seq(BufferedImage.TYPE_INT_RGB, BufferedImage.TYPE_INT_ARGB, BufferedImage.TYPE_BYTE_GRAY)
+    } yield {
+      val img = new BufferedImage(w, h, kind)
+      for (x <- 0 until w; y <- 0 until h) img.setRGB(x, y, rnd.nextInt())
+      val bos = new ByteArrayOutputStream()
+      ImageIO.write(img, "png", bos)
+      bos.toByteArray
+    }
+    val gif = gifBytes(Seq(solid(5, 3, 0xff0000), solid(5, 3, 0x00ff00), solid(2, 2, 0x123456)))
+    (pngs :+ gif).foreach(b => assert(newRgb(b) == oldRgb(b)))
+    // every frame of the animated GIF, as the multi-frame reader sees it
+    def frames(in: javax.imageio.stream.ImageInputStream) = {
+      val reader = ImageIO.getImageReaders(in).next()
+      try {
+        reader.setInput(in, false, false)
+        (0 until reader.getNumImages(true)).map(i => Multimodal.toRgbBytes(reader.read(i)).toSeq)
+      } finally { reader.dispose(); in.close() }
+    }
+    val oldFrames = frames(ImageIO.createImageInputStream(new java.io.ByteArrayInputStream(gif)))
+    assert(oldFrames.size == 3)
+    assert(frames(Multimodal.imageStream(gif)) == oldFrames)
+    // bytes no reader knows decode to None, not an exception
+    assert(Multimodal.readImage(Array[Byte](1, 2, 3)).isEmpty)
+  }
+
   test("sampleFrames: REAL animated-GIF decode — frame sampling, indices, pixels (golden)") {
     val gif = gifBytes(Seq(solid(4, 4, 0xff0000), solid(4, 4, 0x00ff00), solid(4, 4, 0x0000ff)))
     val ds = Seq(BinaryRecord(1L, "anim", gif)).toDS()

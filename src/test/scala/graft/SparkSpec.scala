@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -21,4 +23,18 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** (jobs, tasks) Spark ran while `f` ran. */
+  def jobsAndTasks(f: => Any): (Int, Int) = {
+    val jobs, tasks = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = { tasks.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try { f; TestListenerBus.drain(sc) } finally sc.removeSparkListener(l)
+    (jobs.get, tasks.get)
+  }
 }
